@@ -76,7 +76,8 @@ def farthest_first_seeds(
     Raises on an empty sample or fewer than ``k`` distinct vectors."""
     if not sample:
         raise ValueError(
-            f"train_kmeans: input frame has no rows (need >= k={k} distinct vectors)"
+            f"seed sample is empty: input frame has no rows (need >= k={k} "
+            "distinct vectors)"
         )
     seen: set[tuple] = set()
     uniq: list[list[float]] = []
@@ -87,7 +88,7 @@ def farthest_first_seeds(
             uniq.append(v)
     if len(uniq) < k:
         raise ValueError(
-            f"train_kmeans: seed sample holds only {len(uniq)} distinct "
+            f"seed sample holds only {len(uniq)} distinct "
             f"vectors but k={k} — farthest-first seeding would duplicate centroids; "
             "reduce k or provide more distinct vectors"
         )

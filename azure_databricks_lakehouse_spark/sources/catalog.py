@@ -116,7 +116,7 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:  # noqa: BLE001 - stats are advisory
-        est = 0
+        return df  # fail closed: no size estimate, no shuffle
     if est > _SPREAD_MAX_BYTES:
         return df
     return df.repartition(p, *keys)

@@ -69,7 +69,7 @@ import os
 import shutil
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -85,6 +85,10 @@ _DATA_DIR = "data"
 _ROW_ID_PHYS = "__row_id"
 _CDC_DIR = "_change_data"
 _DV_DIR = "_deletion_vectors"
+# auto DML mode: a touched file with at least this share of its live rows
+# matched is rewritten (copy-on-write); a smaller share is masked with a
+# deletion vector (merge-on-read)
+_DV_THRESHOLD = 0.5
 _SIDECAR_DIR = os.path.join(_MANIFEST_DIR, "_sidecars")
 _LEDGER_DIR = "_copy_ledger"
 
@@ -857,7 +861,6 @@ class ParquetTable:
         self,
         stats: dict[str, tuple[int, int]],
         mode: str,
-        dv_threshold: float,
         allow_drop: bool,
     ) -> tuple[list[str], list[str], list[str]]:
         """Per-file DML strategy from the probe's (live, hit) counts:
@@ -873,32 +876,15 @@ class ParquetTable:
             live, hit = stats[f]
             if hit == 0:
                 continue
-            if mode == "copy-on-write":
-                (drop if (allow_drop and hit == live) else rewrite).append(f)
-            elif mode == "merge-on-read":
-                (drop if (allow_drop and hit == live) else dv).append(f)
+            if allow_drop and hit == live:
+                drop.append(f)
+            elif mode == "copy-on-write" or (
+                mode == "auto" and hit >= _DV_THRESHOLD * live
+            ):
+                rewrite.append(f)
             else:
-                if allow_drop and hit == live:
-                    drop.append(f)
-                elif hit >= dv_threshold * live:
-                    rewrite.append(f)
-                else:
-                    dv.append(f)
+                dv.append(f)
         return drop, rewrite, dv
-
-    def _write_dv_entries(self, pos_df: DataFrame) -> list[str]:
-        """Persist deleted (file, row position) pairs as DV sidecar
-        parquet under ``_deletion_vectors/``; returns the sidecar rels.
-        Distributed write — DV size is ∝ matched rows."""
-        return _write_files(
-            pos_df.select(
-                F.col("__rel").alias("__file"), F.col("__ri").alias("__row_index")
-            ),
-            self.root,
-            [],
-            preserve_layout=True,
-            subdir=_DV_DIR,
-        )
 
     def _rebase_target(self, base: dict, touched: set[str]) -> dict:
         """Delta's conflict matrix for a DML that computed against
@@ -1051,95 +1037,126 @@ class ParquetTable:
                 "(delta.appendOnly=true); unset the property first"
             )
 
-    def delete(
+    def _file_split_dml(
         self,
+        m: dict,
+        operation: str,
         condition,
-        mode: str = "auto",
-        dv_threshold: float = 0.5,
+        mode: str,
+        post: Callable[[DataFrame], DataFrame] | None = None,
+        lookups: Sequence[tuple[DataFrame, str]] = (),
+        incoming: DataFrame | None = None,
     ) -> int:
-        """Delta-DML parity: ``DELETE WHERE condition`` (a Column, or a
-        SQL string to enable metadata pruning).
+        """The one file-split engine behind DELETE, UPDATE and
+        replaceWhere: remove (or, with ``post``, replace) the rows
+        matching ``condition`` in ONE commit.
 
         File-pruned — the 100 TB path: footer stats + partition values
         drop files that cannot match (metadata only), one column-pruned
         probe counts matches per file, and each touched file takes the
         cheapest sound strategy (``mode="auto"``):
 
-        - **drop** — every live row matches: the file leaves the
-          manifest; zero bytes written (deleting a whole partition is a
-          metadata operation, like Delta's partition delete).
+        - **drop** — every live row matches and the verb removes rows
+          (no ``post``): the file leaves the manifest; zero bytes
+          written (deleting a whole partition is a metadata operation,
+          like Delta's partition delete).
         - **rewrite** (copy-on-write) — most rows match
-          (``hit >= dv_threshold * live``): rewrite the file without
-          them; a DV masking most of a file just defers the rewrite.
+          (``hit >= _DV_THRESHOLD * live``): rewrite the file without
+          the matched rows, or with their post-images; a DV masking
+          most of a file just defers the rewrite.
         - **deletion vector** (merge-on-read) — the selective tail: the
           matched row POSITIONS land in a ``_deletion_vectors/``
           sidecar and the data file is untouched; reads mask them with
           a broadcast anti-join.  A one-row DELETE writes a KB, not a
           file — Delta's deletion-vector design re-expressed on
-          ``_metadata.row_index``.
+          ``_metadata.row_index``.  Post-images of DV-masked rows are
+          appended as new rows.
 
         ``mode="copy-on-write"`` / ``"merge-on-read"`` force a single
-        strategy.  Matched rows land as a CDC sidecar (``_change_data/``)
-        in the same commit, so CDF consumers read the delta directly.
-        Old files and superseded DVs remain for time travel until
-        VACUUM; OPTIMIZE (or ``purge_deletion_vectors``) materializes
-        DVs away.
-        """
-        m = self._manifest()
-        self._gate_append_only("DELETE", m)
+        strategy.  What the verbs supply:
+
+        - ``post`` (UPDATE): the post-image projection — it assigns
+          every row of a frame of matched rows, and only the ``__hit``
+          rows of a frame that carries that column;
+        - ``lookups`` (UPDATE): key-unique ``(frame, join_cond_sql)``
+          LEFT-joined onto the touched rows before ``post`` runs;
+        - ``incoming`` (replaceWhere): rows appended in the same commit.
+
+        One CDC sidecar (``_change_data/``) carries the row-level diff
+        — ``delete`` rows, or ``update_preimage``/``update_postimage``
+        pairs, plus ``insert`` rows for ``incoming`` — so CDF consumers
+        read the delta directly.  Old files and superseded DVs remain
+        for time travel until VACUUM; OPTIMIZE (or
+        ``purge_deletion_vectors``) materializes DVs away.  The commit
+        goes through :meth:`_commit_dml_rebase`'s conflict matrix."""
         dec, pred = self._row_marker(condition)
         hit = F.col("__hit")
-        candidates = self._prune_files(m, pred)
-        stats = self._match_stats(m, candidates, dec)
+        stats = self._match_stats(m, self._prune_files(m, pred), dec)
         drop, rewrite, dv_dest = self._split_dml_modes(
-            stats, mode, dv_threshold, allow_drop=True
+            stats, mode, allow_drop=post is None
         )
         touched = sorted([*drop, *rewrite, *dv_dest])
-        if not touched:
+        if not touched and incoming is None:
             # Delta `delta.skipRecordingEmptyCommits` parity (default
             # since 2.3): a zero-match DML commits nothing, so the
             # row-wise and IN-subquery twins produce IDENTICAL histories
             # and a relative `RESTORE ... VERSION AS OF v-1` composes
             # the same way after either.
             return self.latest_version()
-        n_rows = sum(h for _l, h in stats.values())
-        gone = set(drop) | set(rewrite)
-        files: list[str] = []
-        cdc_files: list[str] = []
-        dv_rels: list[str] = []
+        schema_cols = _schema_from_json(self.spark, m["schema"]).fieldNames()
+        lookup_cols = [c for lk, _ in lookups for c in lk.columns]
+        inv = _logical_inverse(m)
+        # row-tracked tables carry the stable id through rewrites (kept
+        # rows are the same logical rows) and, unless fresh rows arrive
+        # whose ids only the commit assigns, into the CDC sidecar so it
+        # serves changes_between(with_row_ids=True) directly (see
+        # _commit's cdc_row_ids)
+        rt = self._rt_state(m) is not None
+        cdc_ids = rt and incoming is None
+        cdc_cols = [*schema_cols, *([_ROW_ID_PHYS] if cdc_ids else [])]
+        held: list[DataFrame] = []
+
+        def _hold(frame: DataFrame) -> DataFrame:
+            held.append(frame.persist())
+            return held[-1]
+
+        def _mark(files: list[str], keep_pos: bool = False) -> DataFrame:
+            frame = dec(
+                self._read_files_aligned(
+                    files, m, keep_pos=keep_pos, with_row_ids=rt
+                )
+            )
+            for lk, cond_sql in lookups:
+                frame = frame.join(lk, F.expr(cond_sql), "left")
+            return _hold(frame)
+
+        def _tag(frame: DataFrame, change: str) -> DataFrame:
+            return frame.withColumn("_change_type", F.lit(change))
+
         # each touched file class is READ (and its match predicate /
         # key-join evaluated) exactly ONCE: the marked frames persist
         # across the data, DV and CDC write actions instead of a fresh
         # scan per sink — the per-commit constant the bench pays, and a
         # third pass over the rewrite working set at 100 TB
-        marked_rw = marked_dv = None
-        schema_cols = _schema_from_json(self.spark, m["schema"]).fieldNames()
-        rt = self._rt_state(m) is not None
-        # row-tracked tables thread the stable id into every frame that
-        # feeds the CDC sidecar, so the sidecar can serve
-        # changes_between(with_row_ids=True) directly (see _commit's
-        # cdc_row_ids)
-        cdc_id_cols = [_ROW_ID_PHYS] if rt else []
         try:
-            rw_spec = dv_spec = None
+            sinks: dict[str, tuple[DataFrame, dict]] = {}
+            data: list[DataFrame] = []
+            # matched rows, as the CDC pre-image and the post-image's input
+            gone: list[DataFrame] = []
+            keep = [*cdc_cols, *lookup_cols]
             if rewrite:
-                marked_rw = dec(
-                    self._read_files_aligned(rewrite, m, with_row_ids=rt)
-                ).persist()
-                rw_spec = (
-                    _to_physical_df(
-                        marked_rw.filter(~hit).drop("__hit"), m
-                    ),
-                    {"root": self.root, "part_cols": m["partition_by"]},
-                )
+                rw = _mark(rewrite)
+                data.append(post(rw) if post else rw.filter(~hit).drop("__hit"))
+                gone.append(rw.filter(hit).select(*keep))
             if dv_dest:
-                marked_dv = dec(
-                    self._read_files_aligned(
-                        dv_dest, m, keep_pos=True, with_row_ids=rt
-                    )
-                ).persist()
-                dv_spec = (
-                    marked_dv.filter(hit).select(
+                matched_dv = _mark(dv_dest, keep_pos=True).filter(hit)
+                gone.append(matched_dv.select(*keep))
+                if post:
+                    # post-images of the DV-masked rows append as new
+                    # rows, in the SAME write action as the rewrite
+                    data.append(post(gone[-1]))
+                sinks["dv"] = (
+                    matched_dv.select(
                         F.col("__rel").alias("__file"),
                         F.col("__ri").alias("__row_index"),
                     ),
@@ -1150,94 +1167,107 @@ class ParquetTable:
                         "subdir": _DV_DIR,
                     },
                 )
-            # CDC sidecars store LOGICAL names (they are read directly,
-            # never through the mapping) — partition them logically too.
-            # Deleted rows come from the cached marked frames; only
-            # whole-file drops still scan.
-            cdc_spec = None
-            if touched:
-                inv = _logical_inverse(m)
-                parts: list[DataFrame] = []
-                if marked_rw is not None:
-                    parts.append(
-                        marked_rw.filter(hit).select(
-                            *schema_cols, *cdc_id_cols
-                        )
-                    )
-                if marked_dv is not None:
-                    parts.append(
-                        marked_dv.filter(hit).select(
-                            *schema_cols, *cdc_id_cols
-                        )
-                    )
-                if drop:
-                    parts.append(
-                        self._read_files_aligned(
-                            drop, m, with_row_ids=rt
-                        ).select(*schema_cols, *cdc_id_cols)
-                    )
-                cdc_df = parts[0]
-                for p in parts[1:]:
-                    cdc_df = cdc_df.unionByName(p)
-                if rt:
-                    cdc_df = cdc_df.withColumnRenamed(
-                        _ROW_ID_PHYS, "_row_id"
-                    )
-                cdc_spec = (
-                    cdc_df.withColumn("_change_type", F.lit("delete")),
-                    {
-                        "root": self.root,
-                        "part_cols": [
-                            inv.get(c, c) for c in m["partition_by"]
-                        ],
-                        "subdir": _CDC_DIR,
-                    },
+            if data:
+                sinks["data"] = (
+                    _to_physical_df(
+                        functools.reduce(DataFrame.unionByName, data), m
+                    ),
+                    {"root": self.root, "part_cols": m["partition_by"]},
                 )
-            # ALL sinks overlap in driver threads (round 13 — the r12
-            # verdict's top item): the rewrite survivors and the DV
-            # positions read disjoint marked frames, and the CDC frame
-            # reads the same persisted frames — BlockManager's per-block
-            # locks make concurrent consumers of one persisted partition
-            # wait-and-read instead of recomputing, so the statement
-            # pays max(sinks) wall-clock instead of cdc + max(data, dv)
-            outs = _write_files_concurrent(
-                *[s for s in (rw_spec, dv_spec, cdc_spec) if s is not None]
-            )
-            if rw_spec is not None:
-                files = outs.pop(0)
-            if dv_spec is not None:
-                dv_rels = outs.pop(0)
-            if cdc_spec is not None:
-                cdc_files = outs.pop(0)
-            return self._commit_dml_rebase(
-                m,
-                "DELETE",
-                touched=set(touched),
-                removed_by_us=gone,
-                new_files=files,
-                dv_dest=dv_dest,
-                dv_rels=dv_rels,
-                cdc_files=cdc_files,
-                cdc_row_ids=rt,
-                metrics={
-                    "rows_deleted": n_rows,
-                    "files_dropped": len(drop),
-                    "files_rewritten": len(rewrite),
-                    "files_dv_masked": len(dv_dest),
-                    "files_added": len(files),
+            if drop:
+                # whole-file drops are the only class the CDC still scans
+                gone.append(
+                    self._read_files_aligned(
+                        drop, m, with_row_ids=cdc_ids
+                    ).select(*keep)
+                )
+            cdc: list[DataFrame] = []
+            if gone:
+                pre = functools.reduce(DataFrame.unionByName, gone)
+                if post is None:
+                    cdc.append(_tag(pre, "delete"))
+                else:
+                    after = post(pre)
+                    # constraints are checked on the POST-update image of
+                    # matched rows only — the checked set stays
+                    # proportional to the change
+                    self._enforce_current(after, m, operation)
+                    cdc.append(
+                        _tag(pre.select(*cdc_cols), "update_preimage")
+                        .unionByName(_tag(after, "update_postimage"))
+                    )
+            if incoming is not None:
+                incoming = _hold(incoming)
+                sinks["new"] = (
+                    _to_physical_df(incoming, m),
+                    {"root": self.root, "part_cols": m["partition_by"]},
+                )
+                cdc.append(_tag(incoming.select(*schema_cols), "insert"))
+            cdc_df = functools.reduce(DataFrame.unionByName, cdc)
+            if cdc_ids:
+                cdc_df = cdc_df.withColumnRenamed(_ROW_ID_PHYS, "_row_id")
+            # CDC sidecars store LOGICAL names (they are read directly,
+            # never through the mapping) — partition them logically too
+            sinks["cdc"] = (
+                cdc_df,
+                {
+                    "root": self.root,
+                    "part_cols": [inv.get(c, c) for c in m["partition_by"]],
+                    "subdir": _CDC_DIR,
                 },
             )
+            # ALL sinks overlap in driver threads: they read
+            # the SAME persisted frames, and BlockManager's per-block
+            # locks make concurrent consumers of one persisted partition
+            # wait-and-read instead of recomputing, so the statement
+            # pays max(sinks) wall-clock instead of their sum
+            out = dict(zip(sinks, _write_files_concurrent(*sinks.values())))
         finally:
-            for cached in (marked_rw, marked_dv):
-                if cached is not None:
-                    cached.unpersist()
+            for frame in held:
+                frame.unpersist()
+        files = out.get("data", []) + out.get("new", [])
+        n_matched = sum(h for _l, h in stats.values())
+        metrics = {"rows_updated" if post else "rows_deleted": n_matched}
+        if incoming is not None:
+            metrics["rows_inserted"] = _file_rows(
+                os.path.join(self.root, _DATA_DIR), out["new"]
+            )
+        if post is None:
+            metrics["files_dropped"] = len(drop)
+        metrics.update(
+            files_rewritten=len(rewrite),
+            files_dv_masked=len(dv_dest),
+            files_added=len(files),
+        )
+        return self._commit_dml_rebase(
+            m,
+            operation,
+            touched=set(touched),
+            removed_by_us=set(drop) | set(rewrite),
+            new_files=files,
+            dv_dest=dv_dest,
+            dv_rels=out.get("dv", []),
+            cdc_files=out["cdc"],
+            metrics=metrics,
+            cdc_row_ids=cdc_ids,
+        )
+
+    def delete(self, condition, mode: str = "auto") -> int:
+        """Delta-DML parity: ``DELETE WHERE condition`` (a Column, or a
+        SQL string to enable metadata pruning).  Runs the file-split
+        engine (:meth:`_file_split_dml` — drop / copy-on-write /
+        deletion vector per touched file, ``mode`` forces one); the
+        matched rows land as ``delete`` rows of the commit's CDC
+        sidecar."""
+        m = self._manifest()
+        self._gate_append_only("DELETE", m)
+        return self._file_split_dml(m, "DELETE", condition, mode)
 
     def update(
         self,
         condition,
         assignments: dict,
         mode: str = "auto",
-        dv_threshold: float = 0.5,
         corr_lookups: Sequence[tuple[DataFrame, str]] | None = None,
     ) -> int:
         """Delta-DML parity: ``UPDATE SET col = expr WHERE condition``
@@ -1249,15 +1279,14 @@ class ParquetTable:
         ``UPDATE SET a = b, b = a`` swaps — all assignment expressions are
         built from the original frame in one ``select``, never chained.
 
-        Same file-pruned strategy split as :meth:`delete`: heavily
-        matched files are rewritten in place (copy-on-write); the
-        selective tail is merge-on-read — the matched rows' positions
-        land in a deletion vector and their POST-images are appended as
-        new files, so a one-row UPDATE writes one row plus a KB of DV
-        instead of rewriting a file.  Pre/post images of the matched
-        rows land as a CDC sidecar in the same commit
-        (``update_preimage`` / ``update_postimage`` — Delta's CDF row
-        types).
+        Runs the file-split engine (:meth:`_file_split_dml`) with the
+        post-image projection below: heavily matched files are
+        rewritten in place; in the selective tail the matched rows'
+        positions land in a deletion vector and their post-images are
+        appended, so a one-row UPDATE writes one row plus a KB of DV.
+        A fully matched file is rewritten, never dropped.  Pre/post
+        images land in the CDC sidecar (``update_preimage`` /
+        ``update_postimage`` — Delta's CDF row types).
 
         ``corr_lookups``: decorrelated scalar-subquery lookups — each
         ``(frame, join_cond_sql)`` LEFT-joins onto the touched rows
@@ -1270,8 +1299,9 @@ class ParquetTable:
         """
         m = self._manifest()
         self._gate_append_only("UPDATE", m)
-        schema_cols = _schema_from_json(self.spark, m["schema"]).fieldNames()
-        unknown = set(assignments) - set(schema_cols)
+        schema = _schema_from_json(self.spark, m["schema"])
+        gtypes = {f.name: f.dataType for f in schema.fields}
+        unknown = set(assignments) - set(gtypes)
         if unknown:
             raise ValueError(f"UPDATE references unknown columns {sorted(unknown)}")
         ident_assigned = set(assignments) & set(
@@ -1282,250 +1312,58 @@ class ParquetTable:
                 f"UPDATE assigns identity columns {sorted(ident_assigned)}; "
                 "they are GENERATED ALWAYS"
             )
-        dec, pred = self._row_marker(condition)
-        hit = F.col("__hit")
-        candidates = self._prune_files(m, pred)
-        stats = self._match_stats(m, candidates, dec)
-        # an update replaces rows, so a fully-matched file is a rewrite,
-        # never a drop
-        _, rewrite, dv_dest = self._split_dml_modes(
-            stats, mode, dv_threshold, allow_drop=False
-        )
-        touched = sorted([*rewrite, *dv_dest])
-        if not touched:
-            # skipRecordingEmptyCommits parity — see delete()
-            return self.latest_version()
-        n_rows = sum(h for _l, h in stats.values())
-        rewrite_set = set(rewrite)
-        files: list[str] = []
-        cdc_files: list[str] = []
-        dv_rels: list[str] = []
         # generated columns not explicitly assigned are RECOMPUTED over
         # the post-update row (Delta's semantics) — a second projection
         # so user RHSs still see pre-update values
         gen_auto = {
-            c: e
+            c: F.expr(e)
             for c, e in m.get("props", {}).get("generated", {}).items()
-            if c not in assignments and c in schema_cols
+            if c not in assignments and c in gtypes
         }
-        gtypes = {
-            f.name: f.dataType
-            for f in _schema_from_json(self.spark, m["schema"]).fields
-        }
+        hit = F.col("__hit")
 
-        def _post_image(frame: DataFrame) -> DataFrame:
+        def _post(frame: DataFrame) -> DataFrame:
             # assignments cast to the DECLARED column type (SQL UPDATE /
             # Delta implicit-cast semantics) — without the cast, a
             # double RHS into a decimal column would commit a data file
-            # whose physical type contradicts the table schema and break
-            # every later read of that file.  A materialized __row_id
-            # rides through: an updated row is the SAME logical row, so
-            # its post-image keeps its stable id (row tracking).
-            extra = (
-                [F.col(_ROW_ID_PHYS)]
-                if _ROW_ID_PHYS in frame.columns
-                else []
-            )
-            out = frame.select(
-                *[
-                    assignments[c].cast(gtypes[c]).alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c in schema_cols
-                ],
-                *extra,
-            )
+            # whose physical type contradicts the table schema.  On a
+            # frame carrying __hit the cast goes INSIDE the when/
+            # otherwise, else Spark coerces the branch types (decimal ⊔
+            # double = double).  A materialized __row_id rides through:
+            # an updated row is the SAME logical row, so its post-image
+            # keeps its stable id (row tracking).
+            cols = frame.columns
+            gated = "__hit" in cols
+            keep = [c for c in ("__hit", _ROW_ID_PHYS) if c in cols]
+
+            def _assign(df: DataFrame, exprs: dict) -> DataFrame:
+                return df.select(
+                    *[
+                        (
+                            F.when(hit, exprs[c].cast(t)).otherwise(F.col(c))
+                            if gated
+                            else exprs[c].cast(t)
+                        ).alias(c)
+                        if c in exprs
+                        else F.col(c)
+                        for c, t in gtypes.items()
+                    ],
+                    *keep,
+                )
+
+            out = _assign(frame, assignments)
             if gen_auto:
-                out = out.select(
-                    *[
-                        F.expr(gen_auto[c]).cast(gtypes[c]).alias(c)
-                        if c in gen_auto
-                        else F.col(c)
-                        for c in schema_cols
-                    ],
-                    *extra,
-                )
-            return out
+                out = _assign(out, gen_auto)
+            return out.drop("__hit") if gated else out
 
-        # rewrite and DV classes are READ (and the match predicate /
-        # key-join evaluated) exactly ONCE each: the marked frames
-        # persist across the data, DV-sidecar and CDC write actions,
-        # and the DV post-images ride the SAME write action as the
-        # rewrite output — one commit pays one scan per file class and
-        # one data write, not a fresh scan per sink
-        rt = self._rt_state(m) is not None
-        corr_cols = [
-            c for lk, _ in (corr_lookups or ()) for c in lk.columns
-        ]
-
-        def _attach(frame: DataFrame) -> DataFrame:
-            # decorrelated scalar lookups ride the touched rows: one
-            # key-unique left join each (never a fan-out), evaluated
-            # once thanks to the persist below
-            for lk, cond_sql in corr_lookups or ():
-                frame = frame.join(lk, F.expr(cond_sql), "left")
-            return frame
-
-        marked_rw = marked_dv = matched_dv = None
-        if rewrite:
-            marked_rw = _attach(
-                dec(self._read_files_aligned(rewrite, m, with_row_ids=rt))
-            ).persist()
-        if dv_dest:
-            marked_dv = _attach(
-                dec(
-                    self._read_files_aligned(
-                        dv_dest, m, keep_pos=True, with_row_ids=rt
-                    )
-                )
-            ).persist()
-            matched_dv = marked_dv.filter(hit).drop("__hit")
-        try:
-            # row-tracked tables keep the stable id on both images so the
-            # sidecar serves changes_between(with_row_ids=True) directly
-            # (see _commit's cdc_row_ids)
-            cdc_id_cols = [_ROW_ID_PHYS] if rt else []
-            pre_parts: list[DataFrame] = []
-            if marked_rw is not None:
-                pre_parts.append(
-                    marked_rw.filter(hit).select(
-                        *schema_cols, *corr_cols, *cdc_id_cols
-                    )
-                )
-            if matched_dv is not None:
-                pre_parts.append(
-                    matched_dv.select(
-                        *schema_cols, *corr_cols, *cdc_id_cols
-                    )
-                )
-            pre = pre_parts[0]
-            for p in pre_parts[1:]:
-                pre = pre.unionByName(p)
-            post = _post_image(pre)
-            # lookup cols: eval-only
-            pre = pre.select(*schema_cols, *cdc_id_cols)
-            # constraints are checked on the POST-update image of matched
-            # rows only — the checked set stays proportional to the change
-            self._enforce_current(post, m, "UPDATE")
-            cdc = pre.withColumn(
-                "_change_type", F.lit("update_preimage")
-            ).unionByName(
-                post.select(*pre.columns).withColumn(
-                    "_change_type", F.lit("update_postimage")
-                )
-            )
-            if rt:
-                cdc = cdc.withColumnRenamed(_ROW_ID_PHYS, "_row_id")
-            inv = _logical_inverse(m)
-
-            # new data = rewritten files' rows + the DV-masked rows'
-            # post-images, in ONE write action
-            data_parts: list[DataFrame] = []
-            if marked_rw is not None:
-                # assignment RHS cast to the declared type BEFORE the
-                # when/otherwise — else Spark coerces the branch types
-                # (e.g. decimal ⊔ double = double) and the rewritten
-                # file's physical type contradicts the table schema
-                updated = marked_rw.select(
-                    *[
-                        F.when(F.col("__hit"), assignments[c].cast(gtypes[c]))
-                        .otherwise(F.col(c))
-                        .alias(c)
-                        if c in assignments
-                        else F.col(c)
-                        for c in schema_cols
-                    ],
-                    "__hit",
-                    *([_ROW_ID_PHYS] if rt else []),
-                )
-                if gen_auto:
-                    updated = updated.select(
-                        *[
-                            F.when(
-                                F.col("__hit"),
-                                F.expr(gen_auto[c]).cast(gtypes[c]),
-                            )
-                            .otherwise(F.col(c))
-                            .alias(c)
-                            if c in gen_auto
-                            else F.col(c)
-                            for c in schema_cols
-                        ],
-                        "__hit",
-                        *([_ROW_ID_PHYS] if rt else []),
-                    )
-                data_parts.append(updated.drop("__hit"))
-            if matched_dv is not None:
-                # post-images of the DV-masked rows append as new rows
-                data_parts.append(
-                    _post_image(matched_dv.drop("__rel", "__ri"))
-                )
-            data_df = data_parts[0]
-            for p in data_parts[1:]:
-                data_df = data_df.unionByName(p)
-            # ALL sinks overlap in driver threads (round 13): data
-            # rewrite, DV positions and the CDC sidecar read the SAME
-            # persisted marked frames — BlockManager's per-block locks
-            # make concurrent consumers of one persisted partition
-            # wait-and-read instead of recomputing, so the statement
-            # pays max(sinks) wall-clock instead of cdc + max(data, dv)
-            specs = [
-                (
-                    _to_physical_df(data_df, m),
-                    {"root": self.root, "part_cols": m["partition_by"]},
-                ),
-                (
-                    cdc,
-                    {
-                        "root": self.root,
-                        "part_cols": [
-                            inv.get(c, c) for c in m["partition_by"]
-                        ],
-                        "subdir": _CDC_DIR,
-                    },
-                ),
-            ]
-            if matched_dv is not None:
-                specs.append(
-                    (
-                        matched_dv.select(
-                            F.col("__rel").alias("__file"),
-                            F.col("__ri").alias("__row_index"),
-                        ),
-                        {
-                            "root": self.root,
-                            "part_cols": [],
-                            "preserve_layout": True,
-                            "subdir": _DV_DIR,
-                        },
-                    )
-                )
-            outs = _write_files_concurrent(*specs)
-            files += outs[0]
-            cdc_files = outs[1]
-            if matched_dv is not None:
-                dv_rels = outs[2]
-            return self._commit_dml_rebase(
-                m,
-                "UPDATE",
-                touched=set(touched),
-                removed_by_us=rewrite_set,
-                new_files=files,
-                dv_dest=dv_dest,
-                dv_rels=dv_rels,
-                cdc_files=cdc_files,
-                cdc_row_ids=rt,
-                metrics={
-                    "rows_updated": n_rows,
-                    "files_rewritten": len(rewrite),
-                    "files_dv_masked": len(dv_dest),
-                    "files_added": len(files),
-                },
-            )
-        finally:
-            for cached in (marked_rw, marked_dv):
-                if cached is not None:
-                    cached.unpersist()
+        return self._file_split_dml(
+            m,
+            "UPDATE",
+            condition,
+            mode,
+            post=_post,
+            lookups=corr_lookups or (),
+        )
 
     def update_where_in(
         self, col: str | Sequence[str], keys: DataFrame, assignments: dict
@@ -1713,7 +1551,6 @@ class ParquetTable:
         keys: DataFrame,
         null_aware: bool = True,
         mode: str = "auto",
-        dv_threshold: float = 0.5,
     ) -> int:
         """``DELETE FROM t WHERE col NOT IN (<keys>)`` (``null_aware=
         True``) or ``WHERE NOT EXISTS (SELECT ... WHERE s.k = t.col)``
@@ -1737,9 +1574,7 @@ class ParquetTable:
         spec = self._anti_spec(col, keys, null_aware)
         if spec == "NONE":
             return self.latest_version()
-        if spec == "ALL":
-            return self.delete(F.lit(True), mode=mode, dv_threshold=dv_threshold)
-        return self.delete(spec, mode=mode, dv_threshold=dv_threshold)
+        return self.delete(F.lit(True) if spec == "ALL" else spec, mode=mode)
 
     def update_where_not_in(
         self,
@@ -1748,7 +1583,6 @@ class ParquetTable:
         assignments: dict,
         null_aware: bool = True,
         mode: str = "auto",
-        dv_threshold: float = 0.5,
     ) -> int:
         """``UPDATE t SET ... WHERE col NOT IN (<keys>)`` /
         ``WHERE NOT EXISTS (...)`` — the UPDATE twin of
@@ -1760,12 +1594,8 @@ class ParquetTable:
         spec = self._anti_spec(col, keys, null_aware)
         if spec == "NONE":
             return self.latest_version()
-        if spec == "ALL":
-            return self.update(
-                F.lit(True), assignments, mode=mode, dv_threshold=dv_threshold
-            )
         return self.update(
-            spec, assignments, mode=mode, dv_threshold=dv_threshold
+            F.lit(True) if spec == "ALL" else spec, assignments, mode=mode
         )
 
     def overwrite_where(
@@ -1773,7 +1603,6 @@ class ParquetTable:
         df: DataFrame,
         condition,
         mode: str = "auto",
-        dv_threshold: float = 0.5,
     ) -> int:
         """Delta ``replaceWhere`` parity: atomically replace exactly the
         rows matching ``condition`` with ``df`` — the idempotent
@@ -1782,24 +1611,18 @@ class ParquetTable:
         rewrites the world and delete-then-append is two commits with a
         torn state in between.
 
-        Same file-pruned machinery as :meth:`delete` for the removal
-        side (drop whole files / copy-on-write / deletion-vector split,
-        cost ∝ files the predicate can touch), plus the incoming
-        frame's files, in ONE commit.  Delta's constraint is enforced:
-        every incoming row must satisfy ``condition`` (otherwise the
-        operation would not be idempotent — rerunning it would delete
-        rows the previous run inserted outside the region); violation
-        raises before anything is written.  CDF consumers get the exact
-        row-level diff from the commit's CDC sidecar (deleted rows +
-        inserted rows — the same sidecar contract as UPDATE).  Refused
-        on identity tables (GENERATED ALWAYS columns cannot take the
+        The removal side is the file-split engine
+        (:meth:`_file_split_dml`, as for :meth:`delete`; ``mode`` forces
+        one strategy), which appends the incoming frame's files in the
+        SAME commit.  Delta's constraint is enforced: every incoming row
+        must satisfy ``condition`` (otherwise the operation would not be
+        idempotent — rerunning it would delete rows the previous run
+        inserted outside the region); violation raises before anything
+        is written.  CDF consumers get the exact row-level diff from the
+        commit's CDC sidecar (deleted rows + inserted rows).  Refused on
+        identity tables (GENERATED ALWAYS columns cannot take the
         incoming frame's explicit values, and assigning fresh ids would
         break the reload-idempotence this operation exists for).
-
-        Concurrency follows the DML conflict matrix
-        (:meth:`_commit_dml_rebase`): commits touching disjoint files
-        rebase and land; a concurrent writer of the replaced region
-        raises ``ConcurrentModificationError``.
         """
         m = self._manifest()
         self._gate_append_only("replaceWhere/INSERT OVERWRITE", m)
@@ -1813,141 +1636,16 @@ class ParquetTable:
         df = self._apply_defaults(df, m)
         self._enforce_current(df, m, "REPLACE_WHERE")
         df = self._align_append_types(df, m)
-        cond_col, pred = self._as_condition(condition)
-        cond = F.coalesce(cond_col, F.lit(False))
-        stray = df.filter(~cond).limit(1).count()
+        cond_col, _pred = self._as_condition(condition)
+        stray = df.filter(~F.coalesce(cond_col, F.lit(False))).limit(1).count()
         if stray:
             raise ValueError(
                 "replaceWhere: the incoming frame holds rows NOT matching "
                 f"{condition!r}; Delta's contract requires every written "
                 "row to satisfy the replacement predicate"
             )
-        candidates = self._prune_files(m, pred)
-        stats = self._match_stats(m, candidates, cond)
-        drop, rewrite, dv_dest = self._split_dml_modes(
-            stats, mode, dv_threshold, allow_drop=True
-        )
-        touched = sorted([*drop, *rewrite, *dv_dest])
-        n_deleted = sum(h for _l, h in stats.values())
-        gone = set(drop) | set(rewrite)
-        files: list[str] = []
-        dv_rels: list[str] = []
-        new_files: list[str] = []
-        schema_cols = _schema_from_json(self.spark, m["schema"]).fieldNames()
-        # each touched file class is READ exactly once (persisted across
-        # the data and CDC sinks, like UPDATE/DELETE), and the first
-        # write wave overlaps in driver threads: the rewrite survivors,
-        # the DV positions and the incoming region come from three
-        # DISJOINT sources, so the concurrent cold materializations
-        # never duplicate work; the CDC sidecar then reads all three
-        # warm plus the whole-file drops
-        marked_rw = marked_dv = None
-        df = df.persist()
-        try:
-            specs: list[tuple[DataFrame, dict]] = []
-            kinds: list[str] = []
-            if rewrite:
-                # kept (non-replaced) rows are the same logical rows —
-                # carry their materialized row ids through the rewrite
-                rt = self._rt_state(m) is not None
-                marked_rw = self._read_files_aligned(
-                    rewrite, m, with_row_ids=rt
-                ).persist()
-                specs.append(
-                    (
-                        _to_physical_df(marked_rw.filter(~cond), m),
-                        {"root": self.root, "part_cols": m["partition_by"]},
-                    )
-                )
-                kinds.append("rw")
-            if dv_dest:
-                marked_dv = self._read_files_aligned(
-                    dv_dest, m, keep_pos=True
-                ).persist()
-                specs.append(
-                    (
-                        marked_dv.filter(cond).select(
-                            F.col("__rel").alias("__file"),
-                            F.col("__ri").alias("__row_index"),
-                        ),
-                        {
-                            "root": self.root,
-                            "part_cols": [],
-                            "preserve_layout": True,
-                            "subdir": _DV_DIR,
-                        },
-                    )
-                )
-                kinds.append("dv")
-            specs.append(
-                (
-                    _to_physical_df(df, m),
-                    {"root": self.root, "part_cols": m["partition_by"]},
-                )
-            )
-            kinds.append("new")
-            for kind, out in zip(kinds, _write_files_concurrent(*specs)):
-                if kind == "rw":
-                    files = out
-                elif kind == "dv":
-                    dv_rels = out
-                else:
-                    new_files = out
-            n_inserted = _file_rows(
-                os.path.join(self.root, _DATA_DIR), new_files
-            )
-            # one CDC sidecar carries the full row-level diff: the
-            # deleted rows AND the inserted region (same contract
-            # UPDATE uses); deleted rows come from the cached marked
-            # frames — only whole-file drops still scan
-            inv = _logical_inverse(m)
-            del_parts: list[DataFrame] = []
-            if marked_rw is not None:
-                del_parts.append(
-                    marked_rw.filter(cond).select(*schema_cols)
-                )
-            if marked_dv is not None:
-                del_parts.append(
-                    marked_dv.filter(cond).select(*schema_cols)
-                )
-            if drop:
-                del_parts.append(
-                    self._read_files_aligned(drop, m).select(*schema_cols)
-                )
-            cdc_df = df.select(*schema_cols).withColumn(
-                "_change_type", F.lit("insert")
-            )
-            for p in del_parts:
-                cdc_df = p.withColumn(
-                    "_change_type", F.lit("delete")
-                ).unionByName(cdc_df)
-            cdc_files = _write_files(
-                cdc_df,
-                self.root,
-                [inv.get(c, c) for c in m["partition_by"]],
-                subdir=_CDC_DIR,
-            )
-        finally:
-            for cached in (marked_rw, marked_dv, df):
-                if cached is not None:
-                    cached.unpersist()
-        return self._commit_dml_rebase(
-            m,
-            "REPLACE_WHERE",
-            touched=set(touched),
-            removed_by_us=gone,
-            new_files=files + new_files,
-            dv_dest=dv_dest,
-            dv_rels=dv_rels,
-            cdc_files=cdc_files,
-            metrics={
-                "rows_deleted": n_deleted,
-                "rows_inserted": n_inserted,
-                "files_dropped": len(drop),
-                "files_rewritten": len(rewrite),
-                "files_dv_masked": len(dv_dest),
-                "files_added": len(files) + len(new_files),
-            },
+        return self._file_split_dml(
+            m, "REPLACE_WHERE", condition, mode, incoming=df
         )
 
     def overwrite_partitions(self, df: DataFrame) -> int:
@@ -5829,15 +5527,15 @@ def _write_files_concurrent(
     actions are independent and overlap almost fully (measured ~3×
     per pair).  Safe because each call stages into its own
     uuid-unique ``_staging_*`` directory and Spark schedules
-    concurrent jobs from separate threads as a matter of course; the
+    concurrent jobs from separate threads as a matter of course.  The
     ONE shared-state hazard is `_write_files`' session-conf mutation
     (variant shredding / optimize-write advisory size), so any spec
     whose frame carries a VARIANT column or whose kwargs set
-    ``optimize_write`` demotes the whole batch to the sequential
-    path.  Callers must pass frames whose expensive parents are
-    already materialized (persisted scans touched by the probe /
-    constraint action, or localCheckpointed merge sources) — the
-    engine's DML paths already guarantee that for scan-sharing."""
+    ``optimize_write`` demotes the whole batch to sequential writes —
+    the only sequential path.  Callers pass frames whose shared
+    parents are persisted (the DML core's marked frames) or
+    localCheckpointed (merge sources), so concurrent consumers read
+    one materialization instead of recomputing it."""
     safe = all(
         not kw.get("optimize_write")
         and not any(
@@ -5846,8 +5544,6 @@ def _write_files_concurrent(
         )
         for df, kw in specs
     )
-    if os.environ.get("SPARK_GRAFT_SEQ_WRITES"):
-        safe = False  # operational kill-switch (and the A/B lever)
     if len(specs) < 2 or not safe:
         return [_write_files(df, **kw) for df, kw in specs]
     from concurrent.futures import ThreadPoolExecutor

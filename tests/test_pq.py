@@ -216,3 +216,15 @@ def test_batched_training_matches_per_subspace_kmeans(spark, corpus):
         assert len(cb.centroids[mi]) == len(ref_books)
         for got_c, ref_c in zip(cb.centroids[mi], ref_books):
             assert got_c == pytest.approx(ref_c, rel=1e-9, abs=1e-9)
+
+
+def test_too_few_distinct_subvectors_raise_without_kmeans_prefix(spark):
+    # the seeding error is shared with train_kmeans, so its message must
+    # not name a function train_pq's caller never called
+    df = spark.createDataFrame(
+        [(i, [float(i % 2)] * 4) for i in range(20)],
+        "vec_id bigint, emb array<double>",
+    )
+    with pytest.raises(ValueError, match="distinct") as err:
+        train_pq(df, m=2, ks=4, n_iter=1)
+    assert "train_kmeans" not in str(err.value)

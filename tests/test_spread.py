@@ -54,3 +54,28 @@ def test_spread_byte_gate_skips_large_underpartitioned_input(
     assert docs.rdd.getNumPartitions() == 1
     monkeypatch.setattr(catalog, "_SPREAD_MAX_BYTES", 1)
     assert catalog.spread(docs, "doc_id") is docs
+
+
+class _StatsFailJdf:
+    """Delegates to the real Java DataFrame except for the optimizer
+    stats path, which raises."""
+
+    def __init__(self, jdf):
+        self._jdf = jdf
+
+    def __getattr__(self, name):
+        if name == "queryExecution":
+            raise RuntimeError("stats unavailable")
+        return getattr(self._jdf, name)
+
+
+def test_spread_fails_closed_when_stats_raise(spark, sf_dir, monkeypatch):
+    # an unknown size must not be read as "small": without an estimate
+    # spread leaves the frame alone instead of shuffling it
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    assert docs.rdd.getNumPartitions() == 1
+    monkeypatch.setattr(docs, "_jdf", _StatsFailJdf(docs._jdf))
+    out = spread(docs, "doc_id")
+    monkeypatch.undo()
+    assert out is docs
+    assert "Exchange" not in _plan(out)
